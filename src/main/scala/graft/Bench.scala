@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -22,53 +21,13 @@ object Bench {
       }
       rm(localDir)
     }
-    // NOTE on llm_curate_e2e_v2: the fused in-memory stage mode
-    // (-Dgraft.e2e2.fused=1, see Dag's `materialize` doc) was built and
-    // A/B-measured here at sf0.1 — fused 9.0/9.1s vs materializing
-    // 8.9/9.1s. The r13 "job-COUNT-bound" hypothesis is REFUTED: the
-    // chain is compute-bound (BPE training alone is ~5s of the ~9s;
-    // text_bpe_encode measures it standalone), so the bench stays on
-    // the materializing path — the same path the oracle verifies.
-    val spark = SparkSession.builder()
+    val spark = GraftConf.builder("graft-bench", cpus.toInt)
       .master(s"local[$cpus]")
       .config("spark.local.dir", localDir.getAbsolutePath)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Match GraftConf: query builders are written for classic
-      // (null-on-invalid) semantics, not ANSI strict mode.
-      .config("spark.sql.ansi.enabled", "false")
       // Local test files are far below the 128 MB default split size —
       // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      // r17 (engine-posture conf, mirrored in GraftConf and Verify — see
-      // OPTIMIZATION_r17.md): AQE may re-plan cached subtrees. The
-      // default (false) pins every .cache() subplan to the static
-      // shuffle-partition count — no post-shuffle coalescing — so each
-      // cached-tier read pays a wave of near-empty tasks. NOT a
-      // local[32] tuning: the conf is scale-independent (it only
-      // matters that no consumer relies on a cached frame's output
-      // partitioning, which the partition-invariance sweeps pin).
-      // Measured 1.4-1.7× on cache-heavy keys at sf0.1; oracle-green at
-      // all SFs after the change. Timing methodology is untouched.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      // The SQL status store retains plan DESCRIPTIONS for up to 1000
-      // executions even with the UI off. Several plans here embed large
-      // constant-folded literal arrays (IVF codebooks, LSH hyperplanes),
-      // so hundreds of retained executions add up to GBs of heap and the
-      // back half of a long run drowns in GC. Keep only the last few.
-      .config("spark.sql.ui.retainedExecutions", "3")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // ContextCleaner frees broadcast blocks / shuffle state only when a
-      // GC collects the weak references — with a 16g heap that can take
-      // 30+ min, by which time ~200 executions' worth of broadcasts have
-      // filled the storage pool and later queries drown in GC pauses
-      // (r02: trivial queries timed 20s+ late in the run, 0.4s isolated).
-      .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Shuffle-write accounting rides the whole run: wall-clock is
     // machine-noisy, but bytes crossing an exchange only change when the
     // PLAN changes — the signal that distinguishes a real regression
@@ -106,7 +65,7 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       // Untimed full GC: lets the ContextCleaner reap this query's
       // broadcasts/shuffles NOW instead of letting 200 executions of
-      // state pile into the storage pool (see periodicGC note above).
+      // state pile into the storage pool (see GraftConf's periodicGC note).
       System.gc()
       name -> dt
     }

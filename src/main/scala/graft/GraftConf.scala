@@ -2,58 +2,63 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production entry point: one place that encodes the session settings
-  * every graft deployment wants, sized by cluster parallelism instead of
-  * Spark's one-size defaults. A consumer replaces the reference runner
-  * with `GraftConf.builder("app", cores).getOrCreate()` and gets the
-  * engine's expected semantics (UTC, ANSI off for BigQuery-style NULL
-  * arithmetic) and scale posture (AQE + skew handling on, shuffle
-  * partitions ∝ cores) without copying config folklore.
+/** The one session posture. Every main (Bench, Verify, RpcServer,
+  * ScaleGen) and the test fixture build their SparkSession from
+  * `GraftConf.builder(appName, cores)`, so the tests, the oracle gate,
+  * the bench and the server all run the same semantics. Callers add
+  * only what is theirs: the master, scratch dirs, scan split size, and
+  * Verify's shuffle-partition sweep.
+  *
+  * Settings that restate Spark defaults are not repeated here (AQE,
+  * its partition coalescing and skew-join splitting, parquet filter
+  * pushdown and runtime bloom filters are all on by default). The
+  * BigQuery dialect is not installed into the root session: engine
+  * sessions get it from `SessionManager.create`, and a cluster can opt
+  * in for every session with `--conf spark.sql.extensions=
+  * graft.GraftExtensions`.
   */
 object GraftConf {
 
-  /** `clusterCores` = total executor cores the app will run with (32 for
-    * the local test rig; thousands in production — shuffle partitioning
-    * scales from it).
+  /** One shuffle partition per core; AQE coalesces small shuffles and
+    * splits skewed partitions at runtime.
     */
-  def builder(appName: String, clusterCores: Int): SparkSession.Builder = {
-    // 2-3 waves of tasks per shuffle stage: large enough that AQE can
-    // coalesce down, small enough that task-launch overhead stays noise.
-    val shufflePartitions = math.max(clusterCores * 2, 8)
+  def shufflePartitions(cores: Int): Int = {
+    require(cores >= 1, s"cores must be positive, got $cores")
+    cores
+  }
+
+  /** `cores` = total executor cores the app runs with. */
+  def builder(appName: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // AQE re-plans at runtime: coalesces small shuffles, converts
-      // sort-merge to broadcast when a side turns out small, splits
-      // skewed partitions — all central to the 100 TB posture.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Let AQE re-plan INSIDE cached plans too (default false): without
-      // it every .cache() subtree plans with the static shuffle-partition
-      // count — no coalescing, no runtime join re-selection — and each
-      // cached-tier read pays a full wave of near-empty tasks. Scale-
-      // independent: the default exists only to preserve cached output
-      // partitioning for consumers that rely on co-partitioning, which
-      // no query here does (results are partition-invariant by
-      // contract — the SPARK_GRAFT_SHUFFLE_PARTITIONS sweeps pin it).
-      // Measured at sf0.1: 1.4-1.7× on the cache-heavy text/dedup keys.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Columnar scans: pushdown + pruning are the difference between
-      // reading 100 TB and reading the 2 columns × 3 partitions asked for.
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Runtime filters: plant a bloom filter from the selective side of
-      // a join onto the fact-side scan (LayoutSpec proves the plans
-      // accept it). Size thresholds stay at defaults — they are tuned
-      // for cluster-scale inputs, which is exactly the deployment here.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "true")
-      // BigQuery-style arithmetic (NULL on overflow/bad cast, not errors).
+      // BigQuery-style arithmetic: NULL on overflow or a bad cast, not
+      // an error. The query builders and the parity specs assume it.
       .config("spark.sql.ansi.enabled", "false")
-      // The engine's extension point: native kernels + BigQuery dialect
-      // for every session built on this context.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-  }
+      .config("spark.sql.shuffle.partitions", shufflePartitions(cores).toString)
+      // Let AQE re-plan inside cached plans too (default false): without
+      // it every .cache() subtree plans with the static shuffle-partition
+      // count (no coalescing, no runtime join re-selection) and each
+      // cached-tier read pays a full wave of near-empty tasks. The
+      // default only preserves cached output partitioning for consumers
+      // that rely on co-partitioning, which no query here does (results
+      // are partition-invariant by contract; Verify's
+      // SPARK_GRAFT_SHUFFLE_PARTITIONS sweep pins it).
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.ui.enabled", "false")
+      // The SQL status store keeps plan descriptions for up to 1000
+      // executions even with the UI off. Several plans embed large
+      // constant-folded literal arrays (IVF codebooks, LSH hyperplanes),
+      // so hundreds of retained executions add up to GBs of heap in a
+      // long-lived process. Keep only the last few.
+      .config("spark.sql.ui.retainedExecutions", "3")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      // The ContextCleaner frees broadcast blocks and shuffle state only
+      // when a GC collects their weak references; on a large, lightly
+      // collected heap that can take long enough for broadcasts to fill
+      // the storage pool. Collect at least once a minute.
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .config("spark.log.level", "WARN")
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the SCALING bench (SURVEY §6j):
@@ -72,14 +71,10 @@ object ScaleGen {
     }
     val (src, dst, factor) =
       (pos(0), pos(1), if (pos.length > 2) pos(2).toInt else 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val spark = GraftConf.builder("graft-scalegen", cpus.toInt)
+      .master(s"local[$cpus]")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     /** @param copyCols primary/copy-linked keys: offset by replica AND
       *                 zipf copy (stay unique across the whole corpus).

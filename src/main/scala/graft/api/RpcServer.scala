@@ -8,8 +8,6 @@ import java.util.Base64
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** JSON-RPC 2.0 server for the bq.* surface, over the same two
   * transports as the reference (reference: src/main.rs:49-188 —
   * newline-delimited JSON on stdio, or WebSocket text frames; framing
@@ -76,13 +74,16 @@ object RpcServer {
     val wire = System.out
     System.setOut(new PrintStream(new java.io.FileOutputStream(java.io.FileDescriptor.err), true))
 
-    val spark = SparkSession.builder()
-      .appName("graft-rpc")
-      .master(sys.props.getOrElse("graft.rpc.master", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // The master is a deployment setting. The session sizes itself by
+    // the master's core count, or by this host's cores for a master
+    // that does not name one.
+    val master = sys.props.getOrElse("graft.rpc.master", "local[4]")
+    val LocalCores = """local\[(\d+)\]""".r
+    val cores = master match {
+      case LocalCores(n) => n.toInt
+      case _ => Runtime.getRuntime.availableProcessors
+    }
+    val spark = graft.GraftConf.builder("graft-rpc", cores).master(master).getOrCreate()
     val rpc = new GraftRpc(spark, backend)
 
     if (transport == "stdio") runStdio(rpc, wire)

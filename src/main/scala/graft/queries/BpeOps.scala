@@ -158,11 +158,11 @@ object BpeOps {
     // every round's pair-count job REPLAYS the accumulated
     // bpe_multi_replace chain from it. The r16 loop cached the full
     // tokenization once per round; at sf0.1 that columnar cache
-    // write+read cycle was ~0.4 s of every ~0.55 s round (measured via
-    // graft.bpe.profile) while a multi-replace byte pass is
-    // milliseconds — so round k now pays k extra map-only native passes
-    // (Σ ≤ rounds²/2 passes of pure memory bandwidth, no shuffle, no
-    // materialization) and saves `rounds` corpus materializations.
+    // write+read cycle was ~0.4 s of every ~0.55 s round while a
+    // multi-replace byte pass is milliseconds — so round k now pays k
+    // extra map-only native passes (Σ ≤ rounds²/2 passes of pure memory
+    // bandwidth, no shuffle, no materialization) and saves `rounds`
+    // corpus materializations.
     // Byte-identical output: the same batches apply in the same order,
     // only re-computed instead of re-read (BpeKernelSpec pins the
     // replace semantics; the oracle pins the trained rules and counts).
@@ -172,9 +172,7 @@ object BpeOps {
     val base = corpus.localCheckpoint()
     var cur = base
     var rules = Vector.empty[Seq[(String, String)]]
-    val prof = sys.props.get("graft.bpe.profile").contains("1")
-    for (round <- 0 until rounds) {
-      val t0 = if (prof) System.nanoTime() else 0L
+    for (_ <- 0 until rounds) {
       val sel = selectDisjoint(topPairs(cur, topM), perRound)
       rules = rules :+ sel
       // Commuting replaces applied in rank order (deterministic, and the
@@ -188,8 +186,6 @@ object BpeOps {
           col("s"),
           sel.map { case (a, b) => S + a + S + S + b + S },
           sel.map { case (a, b) => S + a + b + S }))
-      if (prof) System.err.println(
-        f"[bpe] round $round ${(System.nanoTime() - t0) / 1e9}%.2fs sel=${sel.size}")
     }
     (rules, cur)
   }

@@ -72,6 +72,13 @@ object GraphAnnOps {
   val Beam = 9
   val Hops = 3
 
+  /** Bounded-collect budget of the driver-local walk: a search layer
+    * (the entry layer, or the reps) with at most this many rows is
+    * collected once and walked on the driver; a larger one takes the
+    * distributed fused walk.
+    */
+  private val LocalWalkMaxRows = 65536
+
   /** Band resolution for an n-vector corpus: with FIXED planes the
     * expected bucket size is n/2^planes, so banded pair generation is
     * O(n²/2^planes) — quadratic at any fixed setting (measured: the
@@ -402,7 +409,7 @@ object GraphAnnOps {
     val hops1 = math.max(Hops,
       math.ceil(math.log(idx.l1n.toDouble) / math.log(Degree)).toInt)
     // r16: the entry layer is ~√n rows — when it fits the bounded-
-    // collect budget (default 65536 rows: ≈34 MB of 64-dim vectors PLUS
+    // collect budget (LocalWalkMaxRows: ≈34 MB of 64-dim vectors PLUS
     // the n×Degree adjacency, ≈0.5 M edge rows ≈ 8 MB at the cap — the
     // budget counts BOTH collects, r16 verdict task 9; √n stays under
     // it up to a 4×10⁹-rep corpus), collect it ONCE and run the
@@ -411,7 +418,6 @@ object GraphAnnOps {
     // cosine arithmetic, same entry ranking (localBeamSearch doc);
     // beyond the budget the distributed walk below is unchanged — a
     // size DISPATCH, not a semantic fork (GraphAnnSpec pins equality).
-    val localMax = sys.props.get("graft.ann.localL1Max").map(_.toInt).getOrElse(65536)
     lazy val qRows = qs.select(col("q_id"), col("qv")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
     def collectVecs(df: DataFrame): Map[Long, Seq[Double]] =
@@ -420,7 +426,7 @@ object GraphAnnOps {
     def collectAdj(df: DataFrame): Map[Long, Seq[Long]] =
       df.select(col("vec_id"), col("nbr")).collect()
         .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSeq }
-    val l1 = if (idx.l1n <= localMax) {
+    val l1 = if (idx.l1n <= LocalWalkMaxRows) {
       localBeamSearch(idx.layer1.sparkSession,
         collectVecs(idx.layer1), collectAdj(idx.graph1), qRows,
         k = Entries, hops = hops1, excludeSelf = false)
@@ -448,7 +454,7 @@ object GraphAnnOps {
     // same beamWalk loop, same localCosine arithmetic, bit-equal pool
     // (GraphAnnSpecR16 pins it with seeds). Beyond the budget the
     // distributed fused walk is unchanged — the 100 TB path.
-    val repTop = (if (idx.nReps <= localMax) {
+    val repTop = (if (idx.nReps <= LocalWalkMaxRows) {
       localBeamSearch(idx.reps.sparkSession,
         collectVecs(idx.reps), collectAdj(idx.graph), qRows,
         k = k + 1, hops = Hops, excludeSelf = false, seeds = Some(seeds))

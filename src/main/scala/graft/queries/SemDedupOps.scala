@@ -78,29 +78,22 @@ object SemDedupOps {
 
   /** Add the sign-bucket column at a plane count that SCALES with the
     * distinct-vector count (`nd`, a 1-row broadcast frame with column
-    * `nv`): per hyperplane i, each term is an exact double negation
-    * quantized to 12-dp DECIMAL, and the per-plane sums run as REAL
-    * decimal aggregates over a posexplode (exact and order-independent
-    * — a Catalyst array fold would widen the decimal scale away on
-    * every step), so the sign (and with it the bucket) is engine- and
-    * partitioning-exact. All MaxPlanes sums are computed (bounded,
+    * `nv`). Per hyperplane i, each row folds its own vector: every term
+    * is the exact double negation x·w quantized to decimal(26,12), and
+    * the fold adds the terms in index order, casting the running sum
+    * back to decimal(36,12) after every step. Decimal addition is
+    * exact, so with the scale pinned at 12 the fold equals the
+    * order-independent decimal SUM (the oracle's per-plane aggregate)
+    * digit for digit (36 digits is the precision Spark's own decimal
+    * SUM of these terms returns); the sign, and with it the bucket, is
+    * therefore engine- and partitioning-exact. Without the per-step cast Catalyst would widen
+    * the scale at every addition. The fold is per row, so the bucket
+    * costs no exchange. All MaxPlanes sums are computed (bounded,
     * vector-width work); the bucket folds in only the first
-    * planesFor(nv) of them.
+    * planesFor(nv) of them. Empty vectors are dropped, as the oracle's
+    * UNNEST join drops them.
     */
   private[queries] def bucketed(e: DataFrame, nd: DataFrame): DataFrame = {
-    // r17: the 12 per-plane sums fold PER ROW over the vector array
-    // instead of posexplode → n×d rows → a vec_id exchange → 12 decimal
-    // SUMs → join back by vec_id (two corpus-scale exchanges for a
-    // quantity each row can compute alone — the #7/#8 row-explosion
-    // class; measured 2.6 s of curate_semdedup's ~5 s). Exactness is
-    // unchanged: each term is the IDENTICAL round(x·w, 12) →
-    // decimal(26,12) quantization, and decimal addition is exact, so
-    // the index-order fold equals the order-independent SUM digit for
-    // digit (the per-step cast keeps scale 12; 36-digit headroom
-    // matches the old SUM's decimal(36,12) result type). The empty-
-    // vector boundary keeps the old inner-join semantics (posexplode of
-    // an empty array emitted no rows, dropping the vector): rows with
-    // size(v)=0 are filtered out explicitly.
     val planeSums = (0 until MaxPlanes).map { i =>
       aggregate(
         transform(col("v"),

@@ -1,45 +1,38 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+/** The shipped posture, read back from the live test fixture: SparkSpec
+  * builds its session through [[GraftConf]], so these are the values
+  * every spec, main and the server actually run with.
+  */
+class GraftConfSpec extends SparkSpec {
 
-class GraftConfSpec extends AnyFunSuite {
+  private def conf(key: String): String = spark.conf.get(key)
 
-  /** The builder keeps its options in a private map (no getter, and
-    * calling getOrCreate here would apply them onto the suite-shared
-    * session) — read it reflectively.
-    */
-  private def options(b: org.apache.spark.sql.SparkSession.Builder): Map[String, String] = {
-    var cls: Class[_] = b.getClass
-    while (cls != null) {
-      cls.getDeclaredFields.foreach { f =>
-        f.setAccessible(true)
-        f.get(b) match {
-          case m: scala.collection.mutable.HashMap[_, _]
-              if m.keys.forall(_.isInstanceOf[String]) && m.nonEmpty =>
-            return m.map { case (k, v) => k.toString -> v.toString }.toMap
-          case _ =>
-        }
-      }
-      cls = cls.getSuperclass
-    }
-    fail("builder options map not found reflectively")
+  test("the fixture session runs the shipped posture") {
+    assert(conf("spark.sql.session.timeZone") == "UTC")
+    assert(conf("spark.sql.ansi.enabled") == "false")
+    // Spark defaults the posture relies on without restating them.
+    assert(conf("spark.sql.adaptive.enabled") == "true")
+    assert(conf("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(conf("spark.sql.parquet.filterPushdown") == "true")
+    assert(conf("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
+    assert(conf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(conf("spark.sql.ui.retainedExecutions") == "3")
+    // ANSI off in effect: a bad cast is NULL, not an error.
+    assert(spark.sql("SELECT CAST('x' AS BIGINT) v").collect()(0).isNullAt(0))
   }
 
-  test("builder encodes the scale posture (AQE, pushdown, dialect, UTC)") {
-    val o = options(GraftConf.builder("t", 1000))
-    assert(o.get("spark.sql.adaptive.enabled").contains("true"))
-    assert(o.get("spark.sql.adaptive.skewJoin.enabled").contains("true"))
-    assert(o.get("spark.sql.parquet.filterPushdown").contains("true"))
-    assert(o.get("spark.sql.session.timeZone").contains("UTC"))
-    assert(o.get("spark.sql.extensions").contains("graft.GraftExtensions"))
+  test("the root session carries no BigQuery dialect overrides") {
+    // Spark's SPLIT takes a regex ('.' matches every character); the
+    // dialect's literal SPLIT lives only in engine child sessions.
+    val r = spark.sql("SELECT SPLIT('a.b.c', '.') s").collect()(0).getSeq[String](0)
+    assert(r.forall(_.isEmpty))
   }
 
-  test("shuffle partitions scale with cluster cores, floored for tiny rigs") {
-    assert(options(GraftConf.builder("t", 1000))
-      .get("spark.sql.shuffle.partitions").contains("2000"))
-    assert(options(GraftConf.builder("t", 32))
-      .get("spark.sql.shuffle.partitions").contains("64"))
-    assert(options(GraftConf.builder("t", 2))
-      .get("spark.sql.shuffle.partitions").contains("8"))
+  test("one shuffle partition per core") {
+    assert(GraftConf.shufflePartitions(1) == 1)
+    assert(GraftConf.shufflePartitions(4) == 4)
+    assert(GraftConf.shufflePartitions(1000) == 1000)
+    intercept[IllegalArgumentException](GraftConf.shufflePartitions(0))
   }
 }

@@ -19,7 +19,7 @@ object TestServer {
     // DATABASE in the session catalog) must not litter the repo cwd.
     val wh = _root_.java.nio.file.Files.createTempDirectory("graftwh").toString
     Seq(java) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false", "-Dgraft.rpc.master=local[2]",
+      "-Xmx2g", "-Dgraft.rpc.master=local[2]",
       s"-Dspark.sql.warehouse.dir=$wh",
       "-cp", cp, "graft.api.RpcServer", "--transport", transport) ++ extraArgs
   }

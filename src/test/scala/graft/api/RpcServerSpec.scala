@@ -179,6 +179,23 @@ class RpcServerSpec extends SparkSpec {
     } finally client.close()
   }
 
+  test("server main runs the fixture's SQL semantics (bad cast is NULL)") {
+    // ANSI mode turns this cast into an error; the shipped posture and
+    // the in-process fixture both return NULL.
+    val sql = "SELECT CAST('x' AS INT64) AS v"
+    def schemaAndRows(result: Map[String, Any]) = (result("schema"), result("rows"))
+    val s = asMap(send("""{"jsonrpc":"2.0","method":"bq.createSession","id":1}""")("result"))("sessionId")
+    val local = asMap(send(Json.write(Map("jsonrpc" -> "2.0", "method" -> "bq.query",
+      "params" -> Map("sessionId" -> s, "sql" -> sql), "id" -> 2)))("result"))
+    val client = GraftClient.connect(graft.TestServer.serverCommand("stdio"))
+    try {
+      val rs = client.call("bq.createSession")("sessionId")
+      val remote = client.call("bq.query", Map("sessionId" -> rs, "sql" -> sql))
+      assert(schemaAndRows(remote) == schemaAndRows(local))
+      assert(local("rows") == Seq(Map("f" -> Seq(Map("v" -> null)))))
+    } finally client.close()
+  }
+
   test("--backend jdbc over the wire: remote-warehouse lifecycle through a spawned server (reference main.rs:80 backend selection)") {
     // Seed a FILE-BASED Derby warehouse from this JVM, then shut the
     // database down — embedded Derby admits one JVM at a time, and the
