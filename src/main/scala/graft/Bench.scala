@@ -14,16 +14,10 @@ object Bench {
     // across back-to-back invocations with byte-identical plans. The
     // canary instrumentation below separates within-run JVM accumulation
     // from this cross-run machine-state component.
-    val localDir = java.nio.file.Files.createTempDirectory("graft-bench-").toFile
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(localDir)
-    }
+    val localDir = Scratch.dir("graft-bench-")
     val spark = GraftConf.builder("graft-bench", cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir.getAbsolutePath)
+      .config("spark.local.dir", localDir.toString)
       // Local test files are far below the 128 MB default split size —
       // split aggressively so scans parallelize.
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)

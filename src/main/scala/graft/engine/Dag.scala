@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.{Files, Path}
-
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -75,19 +73,17 @@ object Dag {
       .getOrElse(DefaultMaxConcurrency)
 }
 
-/** @param workDir where derived tables write their parquet snapshots
-  *   (a fresh temp directory when absent).
+/** Derived tables write their parquet snapshots under the session's
+  * work directory ([[GraftSession.workDir]]).
   */
-final class Dag(session: GraftSession, workDir: Option[Path] = None) {
+final class Dag(session: GraftSession) {
 
   private val tables = mutable.LinkedHashMap[String, DagTable]()
   private val deps = mutable.LinkedHashMap[String, Seq[String]]()
-  private lazy val dir: Path =
-    workDir.getOrElse(Files.createTempDirectory("graft-dag"))
 
   /** Table names become temp-view names AND filesystem paths under the
     * work directory; restrict to safe identifiers so a name like
-    * "../../etc" can never escape `dir` (overwrite mode deletes the
+    * "../../etc" can never escape it (overwrite mode deletes the
     * target before writing).
     */
   private val SafeName = "^[A-Za-z_][A-Za-z0-9_]*$".r
@@ -150,8 +146,12 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None) {
   def retryFailed(prev: DagResult, maxConcurrency: Int = Dag.envMaxConcurrency): DagResult =
     runSubset(prev.failed.map(_.table).toSet ++ prev.skipped.toSet, maxConcurrency)
 
+  /** Drop every table's view and delete the derived tables' outputs. */
   def clear(): Unit = {
-    tables.keys.foreach(n => session.spark.catalog.dropTempView(n))
+    tables.values.foreach { t =>
+      session.dropTable(t.name)
+      if (!t.isSource) graft.Scratch.delete(session.workDir.resolve(t.name))
+    }
     tables.clear(); deps.clear()
   }
 
@@ -328,7 +328,7 @@ final class Dag(session: GraftSession, workDir: Option[Path] = None) {
           if (!session.listTables().contains(name)) session.createTable(name, schema)
           if (rows.nonEmpty) session.insert(name, rows)
         case DagTable(_, Some(sql), _, _, _, _) =>
-          val out = dir.resolve(name).toString
+          val out = session.workDir.resolve(name).toString
           session.sql(sql).write.mode("overwrite").parquet(out)
           session.spark.read.parquet(out).createOrReplaceTempView(name)
         case other =>

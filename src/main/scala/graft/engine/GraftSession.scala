@@ -18,6 +18,13 @@ import org.apache.spark.sql.types._
   * cache), but isolated SQLConf, temp-view catalog and function registry.
   * That is exactly the reference's per-session database semantics without
   * per-session process cost.
+  *
+  * A session owns what it creates: its temp views, the snapshots its
+  * inserts persist, its [[Dag]] and last [[DagResult]], its catalog
+  * settings, and one work directory for DAG outputs. [[close]] releases
+  * them. Several connection threads reach one session: the settings
+  * are volatile, and the DAG and work dir are made under the session's
+  * lock.
   */
 final class GraftSession private[engine] (
     val id: String,
@@ -25,6 +32,51 @@ final class GraftSession private[engine] (
     val resolver: TableResolver = LocalResolver) {
 
   import GraftSession._
+
+  @volatile var lastRun: Option[DagResult] = None
+  @volatile var defaultProject: Option[String] = None
+  @volatile var catalogRoot: Option[String] = None
+
+  private var dagRef: Dag = null
+  private var workDirRef: java.nio.file.Path = null
+  private var closed = false
+
+  /** This session's DAG, created on first use. */
+  def dag: Dag = synchronized {
+    if (dagRef == null) dagRef = new Dag(this)
+    dagRef
+  }
+
+  /** Replace the DAG (the directory loaders install the pipeline they
+    * built); tables the old one materialized keep their views.
+    */
+  def dag_=(d: Dag): Unit = synchronized { dagRef = d }
+
+  /** Where this session's DAG tables write their parquet snapshots,
+    * created on first use and deleted by [[close]].
+    */
+  def workDir: java.nio.file.Path = synchronized {
+    if (closed) throw new IllegalStateException(s"session $id is closed")
+    if (workDirRef == null) workDirRef = graft.Scratch.dir("graft-dag")
+    workDirRef
+  }
+
+  /** Release everything this session made: drop its temp views,
+    * unpersist the snapshots they hold (the persisted RDDs under them —
+    * what [[insert]] checkpoints), and delete the work directory.
+    */
+  def close(): Unit = {
+    synchronized { closed = true } // no work dir is made after this
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    val snapshots = views.flatMap(v => scala.util.Try(
+      spark.table(s"`${v.replace("`", "``")}`").queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD
+            if r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => r.rdd
+      }).getOrElse(Nil))
+    views.foreach(dropTable)
+    snapshots.foreach(_.unpersist(blocking = false))
+    Option(workDirRef).foreach(graft.Scratch.delete)
+  }
 
   /** Resolve a table through this session's backend (reference:
     * executor/mod.rs dispatch): session temp views win, then the
@@ -269,14 +321,8 @@ final class SessionManager(root: SparkSession) {
 
   def get(id: String): Option[GraftSession] = Option(sessions.get(id))
 
-  def destroy(id: String): Boolean = {
-    val s = sessions.remove(id)
-    if (s != null) {
-      // Temp views die with the wrapped session; drop eagerly anyway.
-      s.spark.catalog.listTables().collect().foreach(t => s.spark.catalog.dropTempView(t.name))
-      true
-    } else false
-  }
+  def destroy(id: String): Boolean =
+    Option(sessions.remove(id)).map(_.close()).isDefined
 
   def list(): Seq[String] = sessions.keySet().asScala.toSeq.sorted
 }

@@ -1,9 +1,11 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.SparkSession
 
 import graft.Tables
-import graft.engine.{Dag, DagTable, SessionManager}
+import graft.engine.{DagTable, GraftSession, SessionManager}
 
 /** End-to-end DAG pipeline as a verifiable query: parquet sources →
   * three dependency-ordered materialized derived tables → final result.
@@ -33,11 +35,17 @@ object EngineQueries {
         |  CAST(SUM(cnt) AS BIGINT) AS seg_orders, COUNT(*) AS n_customers
         |FROM cust_enriched GROUP BY c_mktsegment""".stripMargin)
 
+  /** The previous call's session, closed when the next call starts
+    * (callers read each result before calling again).
+    */
+  private val previous = new AtomicReference[GraftSession](null)
+
   val defs: Map[String, QDef] = Map(
     "q_dag_pipeline" -> QDef(
       (s: SparkSession, dir: String) => {
         val session = new SessionManager(s).create()
-        val dag = new Dag(session)
+        Option(previous.getAndSet(session)).foreach(_.close())
+        val dag = session.dag
         dag.register(Seq(
           DagTable.view("orders_src", Tables(session.spark, dir, "orders")),
           DagTable.view("customer_src", Tables(session.spark, dir, "customer"))) ++

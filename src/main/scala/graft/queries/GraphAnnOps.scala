@@ -619,7 +619,11 @@ object GraphAnnOps {
         val eAll = corpus(s, dir)
         val qs = probeQueries(eAll)
         val idx = buildIndex(eAll)
-        val indexDir = graft.sources.SourceOps.scratch("annidx", dir)
+        // A fresh dir per call: a second call in one JVM that overwrote
+        // the first call's dir often failed with FILE_NOT_EXIST on files
+        // the overwrite deleted (the first call's cached plans over the
+        // same paths still listed them).
+        val indexDir = graft.Scratch.dir("graft-annidx-").toString
         // The built-index search and the persist→load→search-reloaded
         // chain are independent until the final diff, and each is a
         // string of BOUNDED driver-orchestrated jobs — run them as two

@@ -1,10 +1,12 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.engine.{Dag, DagTable, SessionManager}
+import graft.engine.{DagTable, GraftSession, SessionManager}
 
 /** Round-12 flagship: the FULL curation chain — Gopher quality rules →
   * CCNet perplexity terciles → exact dedup → benchmark decontamination →
@@ -31,21 +33,11 @@ import graft.engine.{Dag, DagTable, SessionManager}
   */
 object PipelineE2E2 {
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** One temp root + one shutdown hook per JVM; each run gets a
-    * subdirectory (see runChainSession).
+  /** The previous run's session, closed (its stage outputs deleted) when
+    * the next run starts: Bench, Verify and the sweeps call this several
+    * times per JVM and read each result before the next call.
     */
-  private lazy val tempRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-e2e2-")
-    sys.addShutdownHook(rmTree(root.toFile))
-    root
-  }
-
-  private val lastRun =
-    new java.util.concurrent.atomic.AtomicReference[java.nio.file.Path](null)
+  private val previous = new AtomicReference[GraftSession](null)
 
   /** Spark-dialect stage SQL. Mirrored 1:1 by the DuckDB CTEs in the
     * oracle below — same predicates, same thresholds, same tie-breaks.
@@ -145,20 +137,11 @@ object PipelineE2E2 {
   /** Run the DAG and return the child session holding every stage view
     * (the spec inspects intermediate stages through it).
     */
-  private[graft] def runChainSession(s: SparkSession, dir: String): graft.engine.GraftSession = {
+  private[graft] def runChainSession(s: SparkSession, dir: String): GraftSession = {
     val gs = new SessionManager(s).create()
+    Option(previous.getAndSet(gs)).foreach(_.close())
     val docsDf = Tables(gs.spark, dir, "documents")
-    // Stage snapshots live under per-run subdirectories of ONE temp root
-    // with ONE shutdown hook (Bench + Verify + the partition-invariance
-    // sweep call this several times per JVM; a root-and-hook per run
-    // accumulated materialization trees and hooks until exit). The
-    // previous run's subtree is deleted eagerly when the next run starts.
-    val work = java.nio.file.Files.createTempDirectory(tempRoot, "run-")
-    lastRun.getAndSet(work) match {
-      case null => ()
-      case prev => rmTree(prev.toFile)
-    }
-    val dag = new Dag(gs, Some(work))
+    val dag = gs.dag
     // bpe is a LAZY view (r17): encodeStats' training loop collects per
     // round, so building the frame eagerly at registration serialized
     // the whole BPE training BEFORE the slot scheduler started; deferred

@@ -86,15 +86,11 @@ object DirectoryCatalog {
     }
   }
 
-  /** Register every parquet table as a view in the session. */
-  def loadParquetDirectory(session: GraftSession, root: String): Seq[String] =
-    loadParquetDirectoryInfo(session, root).map(_._1.fullName)
-
-  /** Same registration, but returns the discovered entry plus its row
-    * count — the payload the RPC layer needs for the reference's
-    * ParquetTableInfo result rows (reference: rpc/types.rs:463; its
-    * loader also reports the loaded row count per table). The count is a
-    * parquet-footer-metadata job, not a full scan.
+  /** Register every parquet table as a view in the session. Returns each
+    * discovered entry plus its row count — the payload the RPC layer
+    * needs for the reference's ParquetTableInfo result rows (reference:
+    * rpc/types.rs:463; its loader also reports the loaded row count per
+    * table). The count is a parquet-footer-metadata job, not a full scan.
     */
   def loadParquetDirectoryInfo(session: GraftSession, root: String): Seq[(Discovered, Long)] = {
     val pq = discover(root).filterNot(_.isSql)
@@ -114,30 +110,29 @@ object DirectoryCatalog {
     * load_sql_directory): the discovered .sql files become derived DAG
     * tables; parquet files are NOT loaded and no source views are
     * created. Sources are expected to exist in the session already (e.g.
-    * a prior loadParquetDirectory call) — exactly the reference's
-    * side-effect contract, which differs from [[loadDagFrom]].
+    * a prior [[loadParquetDirectoryInfo]] call) — exactly the reference's
+    * side-effect contract, which differs from [[loadDagFrom]]. The new
+    * DAG replaces the session's. Returns the discovered .sql entries.
     */
-  def loadSqlDag(session: GraftSession, root: String, workDir: Option[Path] = None): (Dag, Seq[Discovered]) = {
+  def loadSqlDag(session: GraftSession, root: String): Seq[Discovered] = {
     val sql = discover(root).filter(_.isSql)
-    val dag = new Dag(session, workDir)
+    val dag = new Dag(session)
     dag.register(sql.map(d => DagTable.derived(d.table, Files.readString(Paths.get(d.path)))))
-    (dag, sql)
+    session.dag = dag
+    sql
   }
 
-  /** Build a Dag: parquet files as source views, .sql files as derived
-    * tables (dependency-ordered, materialized on run()).
+  /** Replace the session's DAG with one built from the tree: parquet
+    * files as source views, .sql files as derived tables
+    * (dependency-ordered, materialized on run()). Also returns the
+    * per-file info the RPC layer serializes into the reference's
+    * LoadDagFromDirectoryResult (rpc/types.rs:481): parquet sources with
+    * row counts, and the .sql computed tables.
     */
-  def loadDag(session: GraftSession, root: String, workDir: Option[Path] = None): Dag =
-    loadDagFrom(session, root, workDir)._1
-
-  /** [[loadDag]] plus the per-file info the RPC layer serializes into the
-    * reference's LoadDagFromDirectoryResult (rpc/types.rs:481): parquet
-    * sources with row counts, and the .sql computed tables.
-    */
-  def loadDagFrom(session: GraftSession, root: String, workDir: Option[Path] = None)
+  def loadDagFrom(session: GraftSession, root: String)
       : (Dag, Seq[(Discovered, Long)], Seq[Discovered]) = {
     val discovered = discover(root)
-    val dag = new Dag(session, workDir)
+    val dag = new Dag(session)
     val srcInfo = discovered.filterNot(_.isSql).map { d =>
       (d, readTable(session, d).count())
     }
@@ -149,6 +144,7 @@ object DirectoryCatalog {
       DagTable.derived(d.table, Files.readString(Paths.get(d.path)))
     }
     dag.register(sources ++ derived)
+    session.dag = dag
     (dag, srcInfo, sql)
   }
 }

@@ -19,28 +19,15 @@ import graft.queries.QDef
   */
 object SourceOps {
 
-  /** Scratch root per (operator, sf dir, process) — the process id in
-    * the path means concurrent bench and verify runs on the SAME sf dir
-    * can never overwrite each other mid-read; a JVM shutdown hook
-    * removes everything this process created.
+  /** One scratch root per process (so concurrent bench and verify runs
+    * on the SAME sf dir never overwrite each other mid-read), deleted at
+    * JVM exit.
     */
-  private val scratchDirs = scala.collection.mutable.HashSet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.synchronized(scratchDirs.toSeq).foreach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(p))
-      }))
-  }
+  private lazy val scratchRoot = graft.Scratch.dir("graft-src-")
 
-  private[graft] def scratch(op: String, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"${sys.props("java.io.tmpdir")}/graft_${op}_${tag}_p${ProcessHandle.current().pid()}"
-    scratchDirs.synchronized { scratchDirs += path }
-    path
-  }
+  /** Scratch path per (operator, sf dir) under this process's root. */
+  private[graft] def scratch(op: String, dir: String): String =
+    scratchRoot.resolve(s"${op}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").toString
 
   val defs: Map[String, QDef] = Map(
 

@@ -116,12 +116,12 @@ object VectorKernels {
     new GenericArrayData(out)
   }
 
-  /** Minimum long present in BOTH arrays, boxed (null when the
-    * intersection is empty) — the value of
-    * array_min(array_intersect(a, b)) on non-null long arrays, without
-    * array_intersect's per-call hash-set and result-array allocation
-    * (the arrays here are the ≤`tables`-element LSH key lists, so the
-    * nested membership scan is a handful of compares).
+  /** Minimum non-null long present in BOTH arrays, boxed (null when no
+    * non-null element is shared) — the value of
+    * array_min(array_intersect(a, b)), which skips null elements,
+    * without array_intersect's per-call hash-set and result-array
+    * allocation (the arrays here are the ≤`tables`-element LSH key
+    * lists, so the nested membership scan is a handful of compares).
     */
   def minSharedLong(a: ArrayData, b: ArrayData): java.lang.Long = {
     val na = a.numElements(); val nb = b.numElements()
@@ -130,10 +130,10 @@ object VectorKernels {
     var i = 0
     while (i < na) {
       val x = a.getLong(i)
-      if (!found || x < best) {
+      if (!a.isNullAt(i) && (!found || x < best)) {
         var j = 0
         var in = false
-        while (j < nb && !in) { if (b.getLong(j) == x) in = true; j += 1 }
+        while (j < nb && !in) { if (!b.isNullAt(j) && b.getLong(j) == x) in = true; j += 1 }
         if (in) { best = x; found = true }
       }
       i += 1

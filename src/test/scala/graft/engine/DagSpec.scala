@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** Mirrors the reference's pipeline test suite semantics
@@ -11,7 +9,7 @@ class DagSpec extends SparkSpec {
 
   private def freshDag(): (GraftSession, Dag) = {
     val s = new SessionManager(spark).create()
-    (s, new Dag(s, Some(Files.createTempDirectory("dagspec"))))
+    (s, s.dag)
   }
 
   test("register extracts dependencies from SQL, not CTE names") {

@@ -226,8 +226,9 @@ class PlanLintInventorySpec extends SparkSpec {
     "non-equi fallback / missed broadcast / global window fails CI)") {
     val regressions = Seq.newBuilder[String]
     val improvements = Seq.newBuilder[String]
-    // Parallel sweep in bounded batches (graft.TestSweep doc), clearing
-    // the shared cache registry between batches instead of per query. A
+    // Parallel sweep in bounded batches (graft.TestSweep doc), one child
+    // session per item so temp views never cross items, clearing the
+    // shared cache registry between batches instead of per query. A
     // concurrently-registered cache can only SUBSTITUTE a subtree (hiding
     // nodes below it), never add a cartesian/non-equi/window above — so
     // interference can only lower a count, which reports as info; the
@@ -236,7 +237,7 @@ class PlanLintInventorySpec extends SparkSpec {
       .grouped(graft.TestSweep.Threads).foreach { batch =>
         val results = graft.TestSweep.sweepResults(batch) { case (name, fn) =>
           val counts: Map[String, Int] =
-            try PlanLints.findings(fn(spark, sfDir))
+            try PlanLints.findings(fn(spark.newSession(), sfDir))
               .groupBy(_.rule).view.mapValues(_.size).toMap
             catch {
               case e: Throwable =>

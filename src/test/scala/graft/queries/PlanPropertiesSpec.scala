@@ -317,10 +317,12 @@ class PlanPropertiesSpec extends SparkSpec {
     // 280 queries × 2 runs sequentially was ~8 min of the suite's 30-min
     // budget (r16 verdict task 2); Spark schedules concurrent driver
     // threads' jobs fine, and determinism-per-query is independent, so
-    // sweep on a bounded pool. Failures aggregate to one assertion.
+    // sweep on a bounded pool, one child session per item so temp views
+    // never cross items. Failures aggregate to one assertion.
     val bad = graft.TestSweep.sweep(SparkEntry.queries.toSeq) { case (name, fn) =>
-      val a = fn(spark, sfDir).collect().map(canon).toSeq
-      val b = fn(spark, sfDir).collect().map(canon).toSeq
+      val s = spark.newSession()
+      val a = fn(s, sfDir).collect().map(canon).toSeq
+      val b = fn(s, sfDir).collect().map(canon).toSeq
       if (a != b) Some(s"query $name is nondeterministic") else None
     }
     assert(bad.isEmpty, bad.mkString("\n"))

@@ -66,7 +66,8 @@ class VectorKernelSpec extends SparkSpec {
     // r17: the graph-ANN minimal-band emission filter. Pairs come from
     // the real LSH key lists (guaranteed ≥1 shared band within a band
     // bucket) plus disjoint/null fixtures for the empty-intersection
-    // and null semantics.
+    // and null semantics, and arrays with null elements (skipped, as
+    // array_min skips them).
     import spark.implicits._
     val e = graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
@@ -78,6 +79,11 @@ class VectorKernelSpec extends SparkSpec {
         (-1L, Seq(1L, 2L), -2L, Seq(3L, 4L)),          // empty intersection
         (-3L, Seq.empty[Long], -4L, Seq(1L)),           // empty side
         (-5L, Seq(7L, 5L, 9L), -6L, Seq(9L, 5L)))       // unsorted overlap
+        .toDF("ia", "ka", "ib", "kb"))
+      .unionByName(Seq[(Long, Seq[java.lang.Long], Long, Seq[java.lang.Long])](
+        (-7L, Seq(null, 4L), -8L, Seq(0L, 4L)),         // null element, shared 4
+        (-9L, Seq(null), -10L, Seq(0L)),                // null vs 0: nothing shared
+        (-11L, Seq(3L, null), -12L, Seq(null, 3L)))     // nulls on both sides
         .toDF("ia", "ka", "ib", "kb"))
     val diff = pairs.select(
         graft.functions.GraftFunctions.minSharedBand(col("ka"), col("kb")).as("a"),
